@@ -59,7 +59,8 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--batch-size", type=int, default=32,
-        help="Arrow batch size (reference micro-batch=32, :127)",
+        help="reference micro-batch size (:127); accepted for "
+        "compatibility, ignored by the hash scorer (no Arrow stage)",
     )
     p.add_argument(
         "--no-sort", action="store_true",
@@ -72,19 +73,11 @@ def build_parser() -> argparse.ArgumentParser:
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
 
-    from pyspark.sql import functions as F
-
     from swat_mapreduce_spark.operators import classify
     from swat_mapreduce_spark.session import get_spark
     from swat_mapreduce_spark.sources.sinks import write_predictions_tsv
 
     spark = get_spark("swat-cli")
-    if args.batch_size:
-        spark.conf.set(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            str(args.batch_size),
-        )
-
     manifest = spark.read.text(args.input_list).withColumnRenamed(
         "value", "line"
     )
@@ -96,8 +89,7 @@ def main(argv: list[str] | None = None) -> int:
         args.output_dir,
         sort=not args.no_sort,
     )
-    n = spark.read.text(args.output_dir).count()
-    print(f"wrote {n} prediction rows to {args.output_dir}", file=sys.stderr)
+    print(f"wrote predictions to {args.output_dir}", file=sys.stderr)
     return 0
 
 

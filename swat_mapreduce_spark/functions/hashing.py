@@ -77,45 +77,41 @@ DECODE_SALT = "decode"
 DECODE_FAIL_BELOW = 13  # P(fail) = 13/256 ≈ 5%
 
 
-def logit(col: Column, i) -> Column:
-    """Deterministic pseudo-logit for class ``i`` of ``col`` (a path)."""
-    block, off = divmod(int(i), LOGIT_PER_BLOCK)
-    nib = F.substring(
-        F.md5(salted(col, block)), off * LOGIT_NIBBLES + 1, LOGIT_NIBBLES
-    )
-    return (
-        F.conv(nib, 16, 10).cast("bigint") / LOGIT_SCALE - LOGIT_SHIFT
-    )
+def spark_logits_sql(path_expr: str, n: int = 30) -> str:
+    """Spark SQL for the length-``n`` logit vector of ``path_expr`` —
+    the Spark twin of :func:`duck_logit`, one ``array(...)`` of ``n``
+    plain expressions (no lambda).
+
+    Each block digest ``md5(path || ':' || b)`` appears verbatim in
+    its 8 elements, so whole-stage codegen's subexpression elimination
+    computes it once per row: ceil(n/8) md5 calls (4 for n=30).
+    Literals carry the ``D`` suffix — a bare ``4096.0`` is a DECIMAL
+    in Spark SQL (CLAUDE.md gotcha 16)."""
+    terms = []
+    for i in range(n):
+        block, off = divmod(i, LOGIT_PER_BLOCK)
+        nib = (
+            f"substr(md5(concat({path_expr}, ':{block}')), "
+            f"{off * LOGIT_NIBBLES + 1}, {LOGIT_NIBBLES})"
+        )
+        terms.append(
+            f"cast(conv({nib}, 16, 10) as bigint)"
+            f" / {LOGIT_SCALE}D - {LOGIT_SHIFT}D"
+        )
+    return f"array({', '.join(terms)})"
 
 
-def logits_array(col: Column, n: int = 30) -> Column:
-    """Length-``n`` array<double> of deterministic logits — pure JVM
-    expressions, mirrors the model score vector shape
-    (``python/predict_batch_threaded_local.py:113-115``).
+def logits_array(col: str, n: int = 30) -> Column:
+    """Length-``n`` array<double> of deterministic logits for the string
+    column named ``col`` — pure JVM expressions, mirrors the model
+    score vector shape (``python/predict_batch_threaded_local.py:113-115``).
 
-    Block-derived: the ceil(n/8) md5 digests are materialized ONCE in
-    an array-of-blocks expression and the single-level lambda only
-    slices nibbles out of them — ceil(n/8) md5 evaluations per row
-    (4 for n=30) instead of one per class. The lambda references the
-    outer ``blocks`` column expression, never another lambda's
-    variable, so the nested-lambda name-collision hazard (see round-1
-    minhash incident, CLAUDE.md gotcha 1) does not apply."""
-    n_blocks = (n + LOGIT_PER_BLOCK - 1) // LOGIT_PER_BLOCK
-    blocks = F.array(*[F.md5(salted(col, b)) for b in range(n_blocks)])
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n - 1)),
-        lambda i: F.conv(
-            F.substr(
-                F.element_at(blocks, (i / LOGIT_PER_BLOCK).cast("int") + 1),
-                (i % LOGIT_PER_BLOCK) * LOGIT_NIBBLES + 1,
-                F.lit(LOGIT_NIBBLES),
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        / LOGIT_SCALE
-        - LOGIT_SHIFT,
-    )
+    Built from ONE :func:`spark_logits_sql` string: a fixed-width
+    ``array(...)`` costs ceil(n/8) md5 evaluations per row. A
+    ``transform`` lambda over the class indices that reads an outer
+    ``array(md5 ...)`` would run interpreted and rebuild every block
+    digest on each of the n iterations (CLAUDE.md gotcha 16)."""
+    return F.expr(spark_logits_sql("`" + col.replace("`", "``") + "`", n))
 
 
 def decode_ok(col: Column) -> Column:

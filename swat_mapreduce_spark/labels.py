@@ -50,13 +50,18 @@ assert NUM_CLASSES == 30
 assert CLASS_NAMES == sorted(CLASS_NAMES)
 
 
-def labels_df(spark: SparkSession) -> DataFrame:
-    """30-row label dictionary ``(label_idx int, class_name string)``.
+def labels_df(spark: SparkSession, names: list[str] = CLASS_NAMES) -> DataFrame:
+    """Label dictionary ``(label_idx int, class_name string)`` over
+    ``names`` in order (default: the built-in 30 classes).
 
     Tiny dim table — always broadcast when joined (SURVEY.md §2A #14).
-    """
-    return spark.createDataFrame(
-        list(enumerate(CLASS_NAMES)), "label_idx int, class_name string"
+    Built as a SQL VALUES list, so it plans as a ``LocalRelation``, not
+    an RDD scan like ``createDataFrame`` of a list. Names travel as
+    named parameters, so quotes and backslashes need no escaping."""
+    rows = ", ".join(f"({i}, :c{i})" for i in range(len(names)))
+    return spark.sql(
+        f"SELECT * FROM (VALUES {rows}) AS labels(label_idx, class_name)",
+        args={f"c{i}": n for i, n in enumerate(names)},
     )
 
 

@@ -41,7 +41,12 @@ from swat_mapreduce_spark.functions import rounding as R
 from swat_mapreduce_spark.functions import arrays as A
 from swat_mapreduce_spark.functions import hashing as H
 from swat_mapreduce_spark.functions.text import format_prob
-from swat_mapreduce_spark.labels import CLASS_NAMES, NUM_CLASSES, labels_df
+from swat_mapreduce_spark.labels import (
+    CLASS_NAMES,
+    NUM_CLASSES,
+    derive_class_names,
+    labels_df,
+)
 
 # Wart lines injected into the synthetic manifest (FIXTURES.md §B1).
 # Shared constant between the Spark builder and the DuckDB oracle.
@@ -128,12 +133,14 @@ CLEAN_SQL_DUCK = """
 def score(paths: DataFrame, path_col: str = "image_path") -> DataFrame:
     """Attach deterministic logits + decode flag (FIXTURES.md §B3).
 
-    Pure JVM expressions — whole-stage codegen, zero shuffle. The real
-    model path swaps this stage for operators/inference.py."""
-    c = F.col(path_col)
-    return paths.withColumn(
-        "logits", H.logits_array(c, NUM_CLASSES)
-    ).withColumn("decode_ok", H.decode_ok(c))
+    Pure JVM expressions, no lambda — whole-stage codegen, zero
+    shuffle, 4 md5 digests per row for the 30 logits plus one for the
+    decode flag. The real model path swaps this stage for
+    operators/inference.py."""
+    return paths.withColumns({
+        "logits": H.logits_array(path_col, NUM_CLASSES),
+        "decode_ok": H.decode_ok(F.col(path_col)),
+    })
 
 
 def predict_top1(scored: DataFrame) -> DataFrame:
@@ -162,16 +169,8 @@ def attach_labels(
     derivation rules (file lines / sorted dir names / sorted stems,
     labels.derive_class_names); default is the built-in 30-class set.
     """
-    if labels_path is None:
-        names = CLASS_NAMES
-        labels = labels_df(spark)
-    else:
-        from swat_mapreduce_spark.labels import derive_class_names
-
-        names = derive_class_names(labels_path)
-        labels = spark.createDataFrame(
-            list(enumerate(names)), "label_idx int, class_name string"
-        )
+    names = CLASS_NAMES if labels_path is None else derive_class_names(labels_path)
+    labels = labels_df(spark, names)
     return (
         preds.join(F.broadcast(labels), preds.pred_idx == labels.label_idx, "left")
         .withColumn("class", F.coalesce("class_name", F.lit(names[0])))

@@ -92,3 +92,90 @@ def test_tsv_sink_reference_format(spark, sf_dir, tmp_path):
         assert cls in CLASS_NAMES
         float(prob)  # %.4f parses
         assert len(prob.split(".")[1]) == 4
+
+
+# awkward paths: mid-string BOM, non-ASCII, quote, backslash, percent,
+# 1 and 300 characters
+AWKWARD_PATHS = [
+    "/data/img/a\ufeffb.jpg",
+    "/données/猫_ñ.jpg",
+    "/x/it's.jpg",
+    "C:\\img\\a.jpg",
+    "/x/100%_done.jpg",
+    "a",
+    "/" + "p" * 299,
+]
+
+
+def test_logits_identical_across_engines(spark):
+    """The JVM array, the NumPy scorer and the DuckDB oracle expression
+    agree as exact doubles on all 30 logits and on decode_ok."""
+    import duckdb
+    import pandas as pd
+
+    from swat_mapreduce_spark.functions import hashing as H
+    from swat_mapreduce_spark.labels import NUM_CLASSES
+    from swat_mapreduce_spark.operators.inference import (
+        hash_decode_ok_np,
+        hash_logits_np,
+    )
+
+    assert len(AWKWARD_PATHS[-1]) == 300
+    df = spark.createDataFrame([(p,) for p in AWKWARD_PATHS], "image_path string")
+    jvm = {
+        r.image_path: (list(r.logits), r.ok)
+        for r in df.select(
+            "image_path",
+            H.logits_array("image_path", NUM_CLASSES).alias("logits"),
+            H.decode_ok(F.col("image_path")).alias("ok"),
+        ).collect()
+    }
+    ser = pd.Series(AWKWARD_PATHS)
+    np_logits = hash_logits_np(ser)
+    np_ok = hash_decode_ok_np(ser)
+
+    con = duckdb.connect()
+    con.register("paths", pd.DataFrame({"image_path": AWKWARD_PATHS}))
+    duck_rows = con.execute(f"""
+        SELECT p.image_path, g.i,
+               {H.duck_logit('p.image_path', 'g.i')} AS logit,
+               {H.duck_decode_ok('p.image_path')} AS ok
+        FROM paths p, generate_series(0, {NUM_CLASSES - 1}) AS g(i)
+    """).fetchall()
+    duck: dict[str, list] = {p: [None] * NUM_CLASSES for p in AWKWARD_PATHS}
+    duck_ok = {}
+    for p, i, logit, ok in duck_rows:
+        duck[p][i] = logit
+        duck_ok[p] = ok
+
+    assert set(jvm) == set(AWKWARD_PATHS)
+    for r, p in enumerate(AWKWARD_PATHS):
+        logits, ok = jvm[p]
+        assert logits == np_logits[r].tolist() == duck[p], p
+        assert ok == bool(np_ok[r]) == duck_ok[p], p
+
+
+def test_score_plan_has_no_lambda(spark):
+    """Interpreted lambdas re-evaluate captured md5 blocks per element
+    (CLAUDE.md gotcha 16): the scoring plan must be lambda-free."""
+    paths = spark.createDataFrame([("/a.jpg",)], "image_path string")
+    plan = classify.score(paths)._jdf.queryExecution().optimizedPlan().toString()
+    assert "md5" in plan
+    assert "lambda" not in plan.lower()
+
+
+def test_labels_dim_is_local_relation(spark):
+    """The label dim plans as a LocalRelation (no job to broadcast it),
+    for the built-in vocabulary and for custom names alike."""
+    from swat_mapreduce_spark.labels import labels_df
+
+    for dim in (labels_df(spark), labels_df(spark, ["it's", "a\\b"])):
+        plan = dim._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.startswith("LocalRelation"), plan
+    assert [tuple(r) for r in labels_df(spark).collect()] == list(
+        enumerate(CLASS_NAMES)
+    )
+    assert [tuple(r) for r in labels_df(spark, ["it's", "a\\b"]).collect()] == [
+        (0, "it's"),
+        (1, "a\\b"),
+    ]

@@ -48,23 +48,78 @@ def test_cli_manifest_to_tsv(spark, tmp_path):
 
 
 def test_cli_custom_labels(spark, tmp_path):
+    # pred_idx: /x/one.jpg 13, /x/two.jpg 11, /x/23.jpg 1, /x/9.jpg 2;
+    # an index past the vocabulary falls back to names[0]
     manifest = tmp_path / "m.txt"
-    manifest.write_text("/x/one.jpg\n/x/two.jpg\n")
-    labels = tmp_path / "labels.txt"
-    labels.write_text("cat\ndog\n")
-    out = tmp_path / "out2"
+    manifest.write_text("/x/one.jpg\n/x/two.jpg\n/x/23.jpg\n/x/9.jpg\n")
 
     from swat_mapreduce_spark.cli import main
 
-    assert main([str(manifest), str(out), "--labels", str(labels)]) == 0
-    lines = []
-    for part in glob.glob(f"{out}/part-*"):
-        with open(part) as f:
-            lines += [ln for ln in f if ln.strip()]
-    assert len(lines) == 2
-    for ln in lines:
-        cls = ln.split("\t")[1].rsplit(",", 1)[0]
-        assert cls in ("cat", "dog")
+    vocabularies = [
+        ["cat", "dog"],
+        ["cat", "dog", "eel"],
+        ["it's", "back\\slash", "\\'both'\\"],
+    ]
+    for k, names in enumerate(vocabularies):
+        labels = tmp_path / f"labels{k}.txt"
+        labels.write_text("".join(n + "\n" for n in names))
+        out = tmp_path / f"out{k}"
+        assert main([str(manifest), str(out), "--labels", str(labels)]) == 0
+        lines = []
+        for part in glob.glob(f"{out}/part-*"):
+            with open(part) as f:
+                lines += [ln for ln in f if ln.strip()]
+        got = {
+            ln.split("\t")[0]: ln.split("\t")[1].rsplit(",", 1)[0]
+            for ln in lines
+        }
+        assert got == {
+            "/x/one.jpg": names[0],
+            "/x/two.jpg": names[0],
+            "/x/23.jpg": names[1],
+            "/x/9.jpg": names[2] if len(names) > 2 else names[0],
+        }
+
+
+def test_cli_restores_arrow_batch_conf(spark, tmp_path):
+    """--batch-size must not leak into the shared session: a later
+    predict_batch in the same process keeps its own Arrow batch size."""
+    manifest = tmp_path / "m.txt"
+    manifest.write_text("/x/one.jpg\n")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+
+    from swat_mapreduce_spark.cli import main
+
+    assert main([str(manifest), str(tmp_path / "o1"), "--batch-size", "7"]) == 0
+    assert spark.conf.get(key) == before
+    assert main([str(manifest), str(tmp_path / "o2")]) == 0
+    assert spark.conf.get(key) == before
+
+
+def test_cli_job_shape(spark, tmp_path):
+    """One sorted CLI run is exactly four jobs: the label-dim broadcast,
+    the range-sort sample, the shuffle map and the write. The output is
+    not read back. The broadcast still costs a job although the dim is
+    a LocalRelation: BroadcastExchangeExec collects its child through
+    an RDD, and LocalTableScanExec does not short-cut that path."""
+    manifest = tmp_path / "m.txt"
+    manifest.write_text("".join(f"/x/{i}.jpg\n" for i in range(50)))
+
+    from swat_mapreduce_spark.cli import main
+
+    sc = spark.sparkContext
+    jobs = {}
+    for mode, extra in (("sorted", []), ("unsorted", ["--no-sort"])):
+        group = f"cli-job-shape-{mode}"
+        sc.setJobGroup(group, "cli job count")
+        try:
+            assert main([str(manifest), str(tmp_path / mode), *extra]) == 0
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs[mode] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs == {"sorted": 4, "unsorted": 2}
 
 
 def test_cli_bad_args_exit_code():
